@@ -36,48 +36,30 @@ object KBench {
       // output-identity checksum over a dump: total extracted chars and
       // an order-sensitive FNV over every text — compare across kernel
       // changes to prove byte-identical extraction beyond the goldens
-      val in = new DataInputStream(new BufferedInputStream(new FileInputStream(args(1)), 1 << 20))
       var total = 0L
       var fnv = 0xcbf29ce484222325L
-      try {
-        while (true) {
-          val len = in.readInt()
-          val b = new Array[Byte](len)
-          in.readFully(b)
-          Extractor.extract(b, ExtractMode.Plain) match {
-            case Right(res) =>
-              total += res.text.length
-              var i = 0
-              while (i < res.text.length) {
-                fnv = (fnv ^ res.text.charAt(i)) * 0x100000001b3L; i += 1
-              }
-              res.spans.foreach { sp =>
-                fnv = (fnv ^ sp.start) * 0x100000001b3L
-                fnv = (fnv ^ sp.end) * 0x100000001b3L
-              }
-            case Left(reason) =>
-              var i = 0
-              while (i < reason.length) {
-                fnv = (fnv ^ reason.charAt(i)) * 0x100000001b3L; i += 1
-              }
-          }
+      readDump(args(1)).foreach { b =>
+        Extractor.extract(b, ExtractMode.Plain) match {
+          case Right(res) =>
+            total += res.text.length
+            var i = 0
+            while (i < res.text.length) {
+              fnv = (fnv ^ res.text.charAt(i)) * 0x100000001b3L; i += 1
+            }
+            res.spans.foreach { sp =>
+              fnv = (fnv ^ sp.start) * 0x100000001b3L
+              fnv = (fnv ^ sp.end) * 0x100000001b3L
+            }
+          case Left(reason) =>
+            var i = 0
+            while (i < reason.length) {
+              fnv = (fnv ^ reason.charAt(i)) * 0x100000001b3L; i += 1
+            }
         }
-      } catch { case _: java.io.EOFException => () }
-      in.close()
+      }
       println(s"SUM total_chars=$total fnv=$fnv")
     case "run" =>
-      val in = new DataInputStream(new BufferedInputStream(new FileInputStream(args(1)), 1 << 20))
-      val docs = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-      try {
-        while (true) {
-          val len = in.readInt()
-          val b = new Array[Byte](len)
-          in.readFully(b)
-          docs += b
-        }
-      } catch { case _: java.io.EOFException => () }
-      in.close()
-      val arr = docs.toArray
+      val arr = readDump(args(1)).toArray
       val kinds = arr.map(Extractor.payloadKind)
       val reps = args(2).toInt
       // JIT warmup: two full passes (kernel) + anchor warmup
@@ -116,5 +98,46 @@ object KBench {
         n.toDouble / (ns / 1e9) / a
       })
       println(f"TOTAL    docs_per_anchor_op=$tot%.4f  (docs/s per hw-anchor op/s; drift-immune)")
+  }
+
+  /** The payloads of a dump, in order. Every length prefix is checked
+    * against [0, Extractor.MaxDocBytes] before anything is allocated; a
+    * bad prefix or a record cut short fails with the file and the byte
+    * offset of the record. End of file is accepted only between records. */
+  def readDump(path: String): Iterator[Array[Byte]] = new Iterator[Array[Byte]] {
+    private val in = new DataInputStream(new BufferedInputStream(new FileInputStream(path), 1 << 20))
+    private var offset = 0L
+    private var nextDoc: Array[Byte] = fetch()
+
+    private def fetch(): Array[Byte] = {
+      val first = in.read()
+      if (first < 0) { in.close(); return null }
+      val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
+      if ((b1 | b2 | b3) < 0) truncated("length prefix")
+      val len = (first << 24) | (b1 << 16) | (b2 << 8) | b3 // DataOutput.writeInt order
+      if (len < 0 || len > Extractor.MaxDocBytes) {
+        in.close()
+        throw new IllegalArgumentException(
+          s"$path: bad length prefix $len at offset $offset (allowed 0..${Extractor.MaxDocBytes})")
+      }
+      val b = new Array[Byte](len)
+      try in.readFully(b)
+      catch { case _: java.io.EOFException => truncated(s"$len-byte payload") }
+      offset += 4L + len
+      b
+    }
+
+    private def truncated(what: String): Nothing = {
+      in.close()
+      throw new IllegalArgumentException(s"$path: truncated $what at offset $offset")
+    }
+
+    def hasNext: Boolean = nextDoc != null
+    def next(): Array[Byte] = {
+      if (nextDoc == null) throw new NoSuchElementException(s"$path: no more records")
+      val b = nextDoc
+      nextDoc = fetch()
+      b
+    }
   }
 }

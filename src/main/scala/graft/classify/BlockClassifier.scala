@@ -1,6 +1,6 @@
 package graft.classify
 
-import graft.html.Block
+import graft.html.{Block, BlockTable}
 
 /** Boilerpipe/Readability-family block classifier, re-derived natively:
   * deterministic text-density / link-density rules over flat blocks
@@ -32,24 +32,24 @@ object BlockClassifier {
     case _ => false
   }
 
-  def keep(b: Block): Boolean = {
-    if (b.text.isEmpty) false
-    else if (b.inBoilerplateContainer) false
-    else if (b.linkDensity > MaxLinkDensity) false
-    else if (b.headingLevel > 0) b.words >= 1
-    else if (isContentTag(b.kind)) true
-    else if (b.kind == "li" || b.kind == "dt" || b.kind == "dd")
-      b.words >= MinListItemWords && b.linkDensity <= 0.2
-    else b.words >= MinFreeTextWords
-  }
+  def keep(b: Block): Boolean =
+    rule(b.kind, b.text.isEmpty, b.words, b.linkChars, b.totalChars, b.inBoilerplateContainer)
 
-  /** Per-doc classification stats (kept, dropped, keptChars) for the
-    * lineage table (SURVEY.md A9). */
-  def stats(blocks: Seq[Block]): (Long, Long, Long) = {
-    var kept = 0L; var dropped = 0L; var keptChars = 0L
-    blocks.foreach { b =>
-      if (keep(b)) { kept += 1; keptChars += b.text.length } else dropped += 1
+  /** The same verdict for row `r` of a block table (the kernel's form). */
+  def keep(t: BlockTable, r: Int): Boolean =
+    rule(t.kind(r), t.textLen(r) == 0, t.words(r), t.linkChars(r), t.textLen(r), t.boiler(r))
+
+  private def rule(kind: String, empty: Boolean, words: Int, linkChars: Int,
+      totalChars: Int, boiler: Boolean): Boolean = {
+    if (empty || boiler) false
+    else {
+      val linkDensity = if (totalChars == 0) 0.0 else linkChars.toDouble / totalChars.toDouble
+      if (linkDensity > MaxLinkDensity) false
+      else if (Block.headingLevel(kind) > 0) words >= 1
+      else if (isContentTag(kind)) true
+      else if (kind == "li" || kind == "dt" || kind == "dd")
+        words >= MinListItemWords && linkDensity <= 0.2
+      else words >= MinFreeTextWords
     }
-    (kept, dropped, keptChars)
   }
 }

@@ -1,7 +1,7 @@
 package graft.extract
 
 import graft.classify.BlockClassifier
-import graft.html.{Block, Dom, Html5Tokenizer}
+import graft.html.{Block, BlockTable, Dom, KernelScratch}
 import graft.pdf.PdfParser
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -87,59 +87,82 @@ object Extractor {
 
   private def extractHtml(bytes: Array[Byte], mode: ExtractMode): ExtractResult = {
     // ONE ThreadLocal fetch per document for all kernel scratch (r6b)
-    val ks = graft.html.KernelScratch.get()
-    val blocks = Dom.blocksStreamingBuf(bytes, ks) // fused: no token list (DiagPhase)
-    // mode-specific selection predicate (density gate unless the user
-    // pointed at a region — reference '[red] OCR:' / box prompts).
-    // Takes the already-computed keep verdict so the classifier runs
-    // ONCE per block (r6: it previously ran twice on the Plain path —
-    // once for metrics, once inside select).
-    val select: (Block, Boolean) => Boolean = mode match {
-      case ExtractMode.Color(color) =>
-        (b, _) => b.text.nonEmpty && !b.inBoilerplateContainer && matchesColor(b, color)
+    val ks = KernelScratch.get()
+    // fused: no token list (DiagPhase); blocks are rows over a char
+    // arena, so nothing below builds a String or a Block per block
+    val t = Dom.blockTable(bytes, ks)
+    val arena = t.arena
+    // mode-specific selection (density gate unless the user pointed at
+    // a region — reference '[red] OCR:' / box prompts), applied to the
+    // keep verdict the classifier computed ONCE per block
+    var color: String = null
+    var boxFrom = Long.MinValue
+    var boxUntil = Long.MaxValue
+    mode match {
+      case ExtractMode.Color(c) => color = c
       case ExtractMode.Box(x1, x2) =>
         val (from, until) = ExtractMode.byteWindow(bytes.length.toLong, x1, x2)
-        (b, k) => k && b.startByte >= from && b.endByte <= until
-      case _ => (_, k) => k
+        boxFrom = from; boxUntil = until
+      case _ => ()
     }
     val format = mode == ExtractMode.Format
-    // single pass: select -> repeat-suppress -> render -> span, no
-    // intermediate block Vectors (per-doc allocation is the scale cost)
+    // single pass: select -> repeat-suppress -> render -> span
     val sb = { val b = ks.outText; b.setLength(0); b } // thread-reused (r6b)
     val spans = Vector.newBuilder[Span]
-    var seen: scala.collection.mutable.HashSet[String] = null // lazy: rare
+    val seen = ks.repeats
+    seen.clear()
     var kept = 0L; var dropped = 0L; var keptChars = 0L
-    var bi = 0
-    val bn = blocks.length
-    while (bi < bn) {
-      val b = blocks(bi)
-      val isKeep = BlockClassifier.keep(b)
-      if (isKeep) { kept += 1; keptChars += b.text.length }
+    var r = 0
+    while (r < t.n) {
+      val isKeep = BlockClassifier.keep(t, r)
+      if (isKeep) { kept += 1; keptChars += t.textLen(r) }
       else dropped += 1
-      if (select(b, isKeep)) {
-        val repeat = b.words >= NoRepeatWords && {
-          if (seen == null) seen = scala.collection.mutable.HashSet.empty[String]
-          !seen.add(b.text)
-        }
+      val selected =
+        if (color != null)
+          t.textLen(r) > 0 && !t.boiler(r) &&
+            matchesColor(t.refString(t.cls(r)), t.refString(t.style(r)), color)
+        else isKeep && t.startByte(r) >= boxFrom && t.endByte(r) <= boxUntil
+      if (selected) {
+        // a block of ≥ NoRepeatWords words whose text was already
+        // emitted is a repeat; the set compares arena ranges by content
+        val repeat = t.words(r) >= NoRepeatWords && !seen.add(arena, t.textOff(r), t.textLen(r))
         if (!repeat) {
           if (sb.length > 0) sb.append('\n')
-          if (format) sb.append(renderBlock(b, format = true)) else sb.append(b.text)
-          spans += Span(b.startByte, b.endByte, b.kind)
+          if (format) renderRow(sb, t, r) else sb.append(arena, t.textOff(r), t.textLen(r))
+          spans += Span(t.startByte(r), t.endByte(r), t.kind(r))
         }
       }
-      bi += 1
+      r += 1
     }
     var text = sb.toString
     if (format) text = repairLeftRight(text)
     if (text.length > MaxOutChars) text = text.substring(0, MaxOutChars)
     ExtractResult(text, spans.result(),
-      DocMetrics(bytes.length.toLong, 0L, blocks.length.toLong,
+      DocMetrics(bytes.length.toLong, 0L, t.n.toLong,
         kept, dropped, keptChars, text.length.toLong))
   }
 
-  private def matchesColor(b: Block, color: String): Boolean =
-    b.cls == color || b.cls.split(' ').contains(color) ||
-      b.style.replace(" ", "").contains("color:" + color)
+  private def matchesColor(cls: String, style: String, color: String): Boolean =
+    cls == color || cls.split(' ').contains(color) ||
+      style.replace(" ", "").contains("color:" + color)
+
+  /** Structure-preserving rendering (Format mode) of row `r`, appended
+    * in place: headings get markdown marks, list items get dashes,
+    * quotes get '>', tables render as \begin{tabular} so the
+    * reference's category-split regexes (eval_ocr.py:39-41: inline
+    * \(..\), display \[..\], \begin{tabular}..\end{tabular}) classify
+    * the output. */
+  private def renderRow(sb: java.lang.StringBuilder, t: BlockTable, r: Int): Unit = {
+    val kind = t.kind(r)
+    val level = Block.headingLevel(kind)
+    if (kind == "table" && t.cells(r).nonEmpty) sb.append(renderTabular(t.cells(r)))
+    else {
+      if (level > 0) { var i = 0; while (i < level) { sb.append('#'); i += 1 }; sb.append(' ') }
+      else if (kind == "li") sb.append("- ")
+      else if (kind == "blockquote") sb.append("> ")
+      sb.append(t.arena, t.textOff(r), t.textLen(r))
+    }
+  }
 
   /** O4: emit an exact-duplicate long block only once. */
   def suppressRepeats(blocks: Vector[Block]): Vector[Block] = {
@@ -148,20 +171,6 @@ object Extractor {
       if (b.words < NoRepeatWords) true
       else seen.add(b.text)
     }
-  }
-
-  /** Structure-preserving rendering (Format mode): headings get markdown
-    * marks, list items get dashes, tables render as \begin{tabular} so
-    * the reference's category-split regexes (eval_ocr.py:39-41: inline
-    * \(..\), display \[..\], \begin{tabular}..\end{tabular}) classify
-    * the output. */
-  def renderBlock(b: Block, format: Boolean): String = {
-    if (!format) b.text
-    else if (b.headingLevel > 0) ("#" * b.headingLevel) + " " + b.text
-    else if (b.kind == "li") "- " + b.text
-    else if (b.kind == "table" && b.cells.nonEmpty) renderTabular(b.cells)
-    else if (b.kind == "blockquote") "> " + b.text
-    else b.text
   }
 
   def renderTabular(cells: Vector[Vector[String]]): String = {

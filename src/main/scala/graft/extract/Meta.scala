@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, TagOpen}
+import graft.html.{Dom, Html5Tokenizer, TagView}
 import scala.util.control.ControlThrowable
 
 /** Page metadata extraction — title, description, OpenGraph, canonical
@@ -54,7 +54,7 @@ object Meta {
       private def relHasToken(rel: String, tok: String): Boolean =
         rel.toLowerCase.split("[ \t\r\n]+").contains(tok)
 
-      def tagOpen(t: TagOpen): Unit = t.name match {
+      def tagOpen(t: TagView): Unit = t.name match {
         case "html" =>
           if (lang.isEmpty) lang = t.attrOrEmpty("lang").toLowerCase
         case "title" if !t.selfClosing =>

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Html5Tokenizer, HtmlToken, TagClose, TagOpen, TextRun}
+import graft.html.{Html5Tokenizer, TagView}
 import scala.collection.mutable.ArrayBuffer
 
 /** Outlink extraction — the web-graph construction operator a crawl-scale
@@ -96,7 +96,7 @@ object Outlinks {
           anchor.setLength(0)
         }
       }
-      def tagOpen(t: TagOpen): Unit = if (t.name == "a") {
+      def tagOpen(t: TagView): Unit = if (t.name == "a") {
         close() // implicit close of an unterminated anchor
         val h = t.attrOrEmpty("href")
         if (h.nonEmpty) { href = h; anchor.setLength(0) }

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Html5Tokenizer, TagOpen}
+import graft.html.{Html5Tokenizer, TagView}
 import scala.collection.mutable.ArrayBuffer
 
 /** Sitemap parsing — the other half of crawl seeding beside robots.txt
@@ -35,7 +35,7 @@ object Sitemaps {
         loc.setLength(0); lastmod.setLength(0)
         haveLoc = false; inLoc = false; inLastmod = false
       }
-      def tagOpen(t: TagOpen): Unit = t.name match {
+      def tagOpen(t: TagView): Unit = t.name match {
         case "url" | "sitemap" => closeEntry() // implicit close of unterminated entry
         case "loc" => inLoc = true; loc.setLength(0); haveLoc = true
         case "lastmod" => inLastmod = true; lastmod.setLength(0)

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, TagOpen}
+import graft.html.{Dom, Html5Tokenizer, TagView}
 import scala.collection.mutable.ArrayBuffer
 
 /** HTML table → GitHub-flavored-markdown extraction — the web-payload
@@ -104,7 +104,7 @@ object TableMd {
         if (depth == 0) closeTable()
       }
 
-      def tagOpen(t: TagOpen): Unit = t.name match {
+      def tagOpen(t: TagView): Unit = t.name match {
         case "table" if !t.selfClosing =>
           if (depth == 0) { rows.clear(); rowIsTh.clear(); row.clear()
             cell.setLength(0); inCell = false; rowAllTh = true }

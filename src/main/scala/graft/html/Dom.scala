@@ -2,7 +2,8 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-/** A flat content block — the unit the density classifier scores.
+/** A flat content block — the unit the density classifier scores; an
+  * owned copy of one `BlockTable` row (`BlockTable.block`).
   *
   * `text` is the normalized block text (the single normalization point,
   * SURVEY.md §7 hard-part (b)): entities decoded (tokenizer), whitespace
@@ -11,7 +12,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * `startByte`/`endByte` span the raw source region of the block's text
   * (first to last non-whitespace text run); `elemStartByte`/`elemEndByte`
-  * span the whole element including its tags.
+  * span the whole element including its tags. `words` is the separator
+  * (' '/'\n') count of `text` plus one, 0 for empty text — counted by
+  * the builder while it writes the text.
   */
 final case class Block(
     kind: String,
@@ -26,19 +29,15 @@ final case class Block(
     endByte: Long,
     elemStartByte: Long,
     elemEndByte: Long,
-    nSeps: Int = -1) {
-  // `nSeps` is the separator (' '/'\n') count of `text`, fused into the
-  // builder's normalize pass (r6b — `words` was a second full scan over
-  // every kept block's text, ~7% of the html kernel profile); -1 means
-  // "not precomputed" and falls back to the scan (table blocks, tests).
-  lazy val words: Int = if (text.isEmpty) 0 else if (nSeps >= 0) nSeps + 1 else {
-    var c = 1; var i = 0
-    while (i < text.length) { if (text.charAt(i) == ' ' || text.charAt(i) == '\n') c += 1; i += 1 }
-    c
-  }
+    words: Int) {
   def linkDensity: Double =
     if (totalChars == 0) 0.0 else linkChars.toDouble / totalChars.toDouble
-  def headingLevel: Int =
+  def headingLevel: Int = Block.headingLevel(kind)
+}
+
+object Block {
+  /** 1-6 for h1-h6, else 0. */
+  def headingLevel(kind: String): Int =
     if (kind.length == 2 && kind.charAt(0) == 'h' && kind.charAt(1).isDigit) kind.charAt(1) - '0' else 0
 }
 
@@ -118,26 +117,20 @@ object Dom {
 
   /** Collapse [ \t\n\r\f]+ → ' ', honor BR sentinels as hard newlines;
     * leading/trailing hard newlines are stripped. Single streaming pass
-    * (this runs once per block — no regex, no intermediate strings). */
+    * (no regex, no intermediate strings). */
   private[graft] def normalize(raw: CharSequence): String =
-    normalize(raw, null, KernelScratch.get())
+    normalize(raw, KernelScratch.get())
 
-  /** `sepsOut(0)`, when non-null, receives the separator (' '/'\n')
-    * count of the RETURNED string — computed on the emit branches only
-    * (the common write path pays nothing), so `Block.words` needs no
-    * second scan over the text. `ks` carries the flat scratch array:
-    * input copy in [0, len), output in [len, len + outLen) — a bulk
-    * getChars plus a primitive write loop instead of per-char virtual
-    * charAt + StringBuilder appends; fully consumed before return, so
-    * per-thread reuse is safe. Passed in by the sink (r6b) because a
-    * ThreadLocal.get per BLOCK was itself hot on executor threads —
-    * Spark threads carry long ThreadLocalMap probe chains, and the
-    * lookup showed at ~5% in the extract-stage profile. */
-  private[graft] def normalize(raw: CharSequence, sepsOut: Array[Int],
-      ks: KernelScratch): String = {
+  /** `ks` carries the flat scratch array: input copy in [0, len), output
+    * in [len, len + outLen) — a bulk getChars plus a primitive write loop
+    * instead of per-char virtual charAt + StringBuilder appends; fully
+    * consumed before return, so per-thread reuse is safe. Callers inside
+    * a kernel call pass their own scratch (r6b: a ThreadLocal.get per
+    * block was itself hot on executor threads — Spark threads carry long
+    * ThreadLocalMap probe chains). */
+  private[graft] def normalize(raw: CharSequence, ks: KernelScratch): String = {
     val len = raw.length
-    if (len == 0) { if (sepsOut != null) sepsOut(0) = 0; return "" }
-    // copy into the scratch, then run the zero-copy array form over it
+    if (len == 0) return ""
     var buf = ks.normBuf
     if (buf.length < 2 * len) {
       buf = new Array[Char](2 * len + (len >> 1))
@@ -150,95 +143,85 @@ object Dom {
         var ci = 0
         while (ci < len) { buf(ci) = raw.charAt(ci); ci += 1 }
     }
-    normalizeArr(buf, len, sepsOut, ks)
+    new String(buf, len, normalizeInto(buf, len, buf, len, null))
   }
 
-  /** Zero-copy form (r6b): reads the input chars DIRECTLY from `src`
-    * (the sink's flat accumulator) and writes the collapsed output into
-    * the scratch's norm region — one read pass, one write region, one
-    * final String copy; the old CharSequence form paid an extra full
-    * input copy per block. `src` may alias ks.normBuf's low region
-    * (the CharSequence wrapper above): output writes go to
-    * [src-len, ...) in that case, never below the read cursor. */
-  private[graft] def normalizeArr(src: Array[Char], len: Int,
-      sepsOut: Array[Int], ks: KernelScratch): String = {
-    if (len == 0) { if (sepsOut != null) sepsOut(0) = 0; return "" }
-    var outBuf = ks.normBuf
-    val out = if (src eq outBuf) len else 0 // avoid clobbering aliased input
-    if (outBuf.length < out + len) {
-      outBuf = new Array[Char](out + len + (len >> 1))
-      if (out > 0) System.arraycopy(src, 0, outBuf, 0, len) // re-copy aliased input
-      ks.normBuf = outBuf
-    }
-    val in = if (src eq ks.normBuf) ks.normBuf else src
+  /** The normalization loop: reads `src[0, len)` and writes the collapsed
+    * text to `dst` from index `at`, returning its length (never more than
+    * `len`; `dst` may be `src` when `at >= len`). `sepsOut(0)`, when
+    * non-null, receives the separator (' '/'\n') count of the written
+    * text — counted on the emit branches only (r6b), so a block's word
+    * count needs no second scan. */
+  private def normalizeInto(src: Array[Char], len: Int, dst: Array[Char], at: Int,
+      sepsOut: Array[Int]): Int = {
     var k = 0     // output length
     var seps = 0  // ' ' + '\n' emitted (word separators)
     var ws = false
     var i = 0
     while (i < len) {
-      val c = in(i)
+      val c = src(i)
       val cls = if (c < 256) normCls(c) else 0
       if (cls == 0) {
-        if (ws && k > 0 && outBuf(out + k - 1) != '\n') { outBuf(out + k) = ' '; k += 1; seps += 1 }
+        if (ws && k > 0 && dst(at + k - 1) != '\n') { dst(at + k) = ' '; k += 1; seps += 1 }
         ws = false
-        outBuf(out + k) = c; k += 1
+        dst(at + k) = c; k += 1
       } else if (cls == 1) {
         ws = true
       } else { // BR sentinel
-        if (k > 0) { outBuf(out + k) = '\n'; k += 1; seps += 1 } // skip leading hard newlines
+        if (k > 0) { dst(at + k) = '\n'; k += 1; seps += 1 } // skip leading hard newlines
         ws = false
       }
       i += 1
     }
-    while (k > 0 && outBuf(out + k - 1) == '\n') { k -= 1; seps -= 1 }
+    while (k > 0 && dst(at + k - 1) == '\n') { k -= 1; seps -= 1 }
     if (sepsOut != null) sepsOut(0) = seps
-    new String(outBuf, out, k)
+    k
   }
 
   /** Replay a materialized token list into the block builder — kept for
     * tests and callers that already hold tokens; the extraction kernel
-    * uses the fused `blocksStreaming` (no token list, one pass). Both
-    * paths share ONE builder (`BlockSink`), so they cannot diverge. */
+    * streams (no token list, one pass). Both feed ONE builder
+    * (`BlockSink`), so they cannot diverge. */
   def blocks(tokens: scala.collection.IndexedSeq[HtmlToken]): Vector[Block] = {
-    val sink = new BlockSink
+    val ks = KernelScratch.get()
+    val sink = ks.blockSink
+    sink.reset()
     var ti = 0
     val tn = tokens.length
     while (ti < tn) {
       tokens(ti) match {
-        case t: TagOpen  => sink.tagOpen(t)
+        case t: TagOpen  => sink.tagOpen(ks.tagView.load(t))
         case t: TagClose => sink.tagClose(t.name, t.startByte, t.endByte)
         case t: TextRun  => sink.text(t.text, t.startByte, t.endByte)
         case _           => () // comments, doctype
       }
       ti += 1
     }
-    sink.result()
+    sink.finish().toBlocks
   }
 
   /** Fused path: bytes → blocks in one scan, no token materialization
     * (the per-doc token array, TextRun strings and comment bodies were
-    * ~40% of html kernel cost — DiagPhase). */
-  def blocksStreaming(bytes: Array[Byte]): Vector[Block] = {
-    val sink = new BlockSink
-    Html5Tokenizer.stream(bytes, sink)
-    sink.result()
+    * ~40% of html kernel cost — DiagPhase). The owned-`Block` form of
+    * `blockTable`, for callers that keep blocks past the kernel call. */
+  def blocksStreaming(bytes: Array[Byte]): Vector[Block] =
+    blockTable(bytes, KernelScratch.get()).toBlocks
+
+  /** The extraction kernel's form: the document's blocks as rows of
+    * `ks.blocks`, valid until the next kernel call on this thread — no
+    * `String` and no `Block` per block. */
+  private[graft] def blockTable(bytes: Array[Byte], ks: KernelScratch): BlockTable = {
+    val sink = ks.blockSink
+    sink.reset()
+    Html5Tokenizer.stream(bytes, sink, ks)
+    sink.finish()
   }
 
-  /** Buffer variant for the extraction hot loop (r6): skips the
-    * Vector conversion; same blocks in the same order. */
-  private[graft] def blocksStreamingBuf(bytes: Array[Byte]): ArrayBuffer[Block] =
-    blocksStreamingBuf(bytes, KernelScratch.get())
-
-  private[graft] def blocksStreamingBuf(bytes: Array[Byte],
-      ks: KernelScratch): ArrayBuffer[Block] = {
-    val sink = new BlockSink(ks)
-    Html5Tokenizer.stream(bytes, sink)
-    sink.resultBuffer()
-  }
-
-  /** The single block-building state machine, fed by tokenizer events. */
-  final class BlockSink(ks: KernelScratch) extends Html5Tokenizer.TokenSink {
-    def this() = this(KernelScratch.get())
+  /** The single block-building state machine, fed by tokenizer events.
+    * One per thread (`KernelScratch.blockSink`), reset per document; it
+    * writes each block as one row of `ks.blocks`, its normalized text
+    * straight into the table's arena. */
+  final class BlockSink private[html] (ks: KernelScratch) extends Html5Tokenizer.TokenSink {
 
     /** The sink reads attributes only on table (class) and block-start
       * tags (class/style via startBlock) — inline tags (a/span/b/img,
@@ -246,31 +229,30 @@ object Dom {
       * attr string construction in the tokenizer entirely (r6b). */
     override def wantsAttrs(name: String): Boolean =
       name == "table" || (tagFlags(name) & FBlock) != 0
-    private val out = new ArrayBuffer[Block]
+
+    private val tbl = ks.blocks
 
     private var suppressDepth = 0
     private var boilerDepth = 0
     private var linkDepth = 0
-    private val stack = new ArrayBuffer[String]
+    // open block tags; searched from the top with a plain loop
+    private var stack = new Array[String](32)
+    private var depth = 0
 
-    // current block accumulation
+    // current block accumulation; cls/style are arena refs
     private var curKind = "body"
-    private var curCls = ""
-    private var curStyle = ""
+    private var curCls = 0L
+    private var curStyle = 0L
     private var curElemStart = 0L
-    private var curElemEnd = 0L
-    // Flat char accumulator for the current block's text (r6b): a
-    // StringBuilder here paid coder checks (LATIN1/UTF16 inflation) on
-    // every append plus a full getChars copy into normalize's scratch;
-    // the flat array appends with arraycopy and normalize reads it
-    // zero-copy. Thread-scratch, reused across documents.
-    private var tBuf: Array[Char] = ks.sinkBuf
+    // Flat char accumulator for the current block's raw text (r6b):
+    // appends by arraycopy, and normalization reads it in place.
+    private var tBuf = new Array[Char](8 * 1024)
     private var tLen = 0
     private def tEnsure(extra: Int): Unit =
       if (tLen + extra > tBuf.length) {
         val n = new Array[Char](math.max(tBuf.length * 2, tLen + extra))
         System.arraycopy(tBuf, 0, n, 0, tLen)
-        tBuf = n; ks.sinkBuf = n
+        tBuf = n
       }
     private def tAppend(c: Char): Unit = { tEnsure(1); tBuf(tLen) = c; tLen += 1 }
     private def tAppend(cs: CharSequence): Unit = cs match {
@@ -297,7 +279,7 @@ object Dom {
 
     // table accumulation
     private var tableDepth = 0
-    private var tblCls = ""
+    private var tblCls = 0L
     private var tblElemStart = 0L
     private val tblRows = new ArrayBuffer[Vector[String]]
     private val tblRow = new ArrayBuffer[String]
@@ -308,37 +290,106 @@ object Dom {
 
     private val sepsBox = new Array[Int](1)
 
+    /** Start of a document: empty table, builder state as constructed. */
+    private[html] def reset(): Unit = {
+      tbl.clear()
+      suppressDepth = 0; boilerDepth = 0; linkDepth = 0; depth = 0
+      startBlock("body", 0L, 0L, 0L)
+      tLen = 0; curLink = 0; spanStart = -1L; spanEnd = -1L
+      tableDepth = 0; tblCls = 0L; tblElemStart = 0L
+      tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
+      tblSpanStart = -1L; tblSpanEnd = -1L
+    }
+
+    /** End of a document: flushes the open block; the table is complete. */
+    def finish(): BlockTable = {
+      flush(0L)
+      tbl
+    }
+
+    private def addRow(kind: String, off: Int, len: Int, words: Int, link: Int,
+        start: Long, end: Long, elemStart: Long, elemEnd: Long, cls: Long,
+        style: Long, cells: Vector[Vector[String]]): Unit = {
+      val r = tbl.addRow()
+      tbl.kind(r) = kind; tbl.textOff(r) = off; tbl.textLen(r) = len
+      tbl.words(r) = words; tbl.linkChars(r) = link; tbl.boiler(r) = boilerDepth > 0
+      tbl.startByte(r) = start; tbl.endByte(r) = end
+      tbl.elemStartByte(r) = elemStart; tbl.elemEndByte(r) = elemEnd
+      tbl.cls(r) = cls; tbl.style(r) = style; tbl.cells(r) = cells
+    }
+
     private def flush(elemEnd: Long): Unit = {
-      val text =
-        if (curPre) {
-          // in-place sentinel scan over the flat accumulator (r6b: no
-          // copy at all before the final String); the scan also counts
-          // separators (fused Block.words)
-          val len = tLen
-          val from = if (len > 0 && tBuf(0) == '\n') 1 else 0
-          var seps = 0
-          var i = from
-          while (i < len) {
-            if (tBuf(i) == BrSentinel) tBuf(i) = '\n'
-            if (tBuf(i) == ' ' || tBuf(i) == '\n') seps += 1
-            i += 1
-          }
-          sepsBox(0) = seps
-          new String(tBuf, from, len - from)
-        } else normalizeArr(tBuf, tLen, sepsBox, ks)
-      if (text.nonEmpty) {
-        out += Block(curKind, text, Vector.empty, curCls, curStyle, curLink,
-          text.length, boilerDepth > 0, spanStart, spanEnd, curElemStart,
-          if (elemEnd > 0) elemEnd else spanEnd, nSeps = sepsBox(0))
+      tbl.ensureArena(tLen) // normalized text is never longer than raw
+      val a = tbl.arena
+      val off = tbl.arenaLen
+      var len = 0
+      var seps = 0
+      if (curPre) {
+        // no collapsing: BR sentinels become '\n', one leading newline
+        // is stripped; the copy also counts separators
+        var i = if (tLen > 0 && tBuf(0) == '\n') 1 else 0
+        while (i < tLen) {
+          val c = if (tBuf(i) == BrSentinel) '\n' else tBuf(i)
+          if (c == ' ' || c == '\n') seps += 1
+          a(off + len) = c; len += 1
+          i += 1
+        }
+      } else {
+        len = normalizeInto(tBuf, tLen, a, off, sepsBox)
+        seps = sepsBox(0)
+      }
+      if (len > 0) {
+        tbl.arenaLen += len
+        addRow(curKind, off, len, seps + 1, curLink, spanStart, spanEnd, curElemStart,
+          if (elemEnd > 0) elemEnd else spanEnd, curCls, curStyle, null)
       }
       tLen = 0; curLink = 0; spanStart = -1L; spanEnd = -1L
     }
 
-    private def startBlock(kind: String, cls: String, style: String, elemStart: Long): Unit = {
+    /** A table block: cells joined by ' ', rows by '\n', written straight
+      * into the arena. Unlike other blocks it is kept with empty text. */
+    private def addTable(rows: Vector[Vector[String]], elemEnd: Long): Unit = {
+      val from = tbl.arenaLen
+      var ri = 0
+      while (ri < rows.length) {
+        if (ri > 0) arenaPut("\n")
+        val row = rows(ri)
+        var ci = 0
+        while (ci < row.length) { if (ci > 0) arenaPut(" "); arenaPut(row(ci)); ci += 1 }
+        ri += 1
+      }
+      var seps = 0
+      var i = from
+      while (i < tbl.arenaLen) {
+        val c = tbl.arena(i)
+        if (c == ' ' || c == '\n') seps += 1
+        i += 1
+      }
+      val len = tbl.arenaLen - from
+      addRow("table", from, len, if (len == 0) 0 else seps + 1, 0, tblSpanStart, tblSpanEnd,
+        tblElemStart, elemEnd, tblCls, 0L, rows)
+    }
+
+    private def arenaPut(s: String): Unit = {
+      tbl.ensureArena(s.length)
+      s.getChars(0, s.length, tbl.arena, tbl.arenaLen)
+      tbl.arenaLen += s.length
+    }
+
+    /** Attribute `k` of `t` copied into the arena, as a ref (0 if absent
+      * or empty). */
+    private def attrRef(t: TagView, k: String): Long = {
+      val i = t.attrIndex(k)
+      if (i < 0) 0L else tbl.appendRef(t.valueChars, t.valueOff(i), t.valueLen(i))
+    }
+
+    private def startBlock(kind: String, cls: Long, style: Long, elemStart: Long): Unit = {
       curKind = kind; curCls = cls; curStyle = style
-      curElemStart = elemStart; curElemEnd = 0L
+      curElemStart = elemStart
       curPre = kind == "pre"
     }
+
+    private def enclosingKind: String = if (depth > 0) stack(depth - 1) else "body"
 
     private def hasNonWs(s: CharSequence): Boolean = {
       var i = 0
@@ -353,7 +404,7 @@ object Dom {
     def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
     def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
 
-    def tagOpen(t: TagOpen): Unit = {
+    def tagOpen(t: TagView): Unit = {
         val name = t.name
         val fl = tagFlags(name)
         if ((fl & FSuppress) != 0) {
@@ -362,7 +413,7 @@ object Dom {
           if (name == "table") {
             if (tableDepth == 0) {
               flush(0L)
-              tblCls = t.attrOrEmpty("class")
+              tblCls = attrRef(t, "class")
               tblElemStart = t.startByte.toLong
               tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
               tblSpanStart = -1L; tblSpanEnd = -1L
@@ -388,8 +439,9 @@ object Dom {
           } else if ((fl & FBlock) != 0) {
             flush(0L)
             if ((fl & FBoiler) != 0) boilerDepth += 1
-            stack += name
-            startBlock(name, t.attrOrEmpty("class"), t.attrOrEmpty("style"), t.startByte.toLong)
+            if (depth == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * depth)
+            stack(depth) = name; depth += 1
+            startBlock(name, attrRef(t, "class"), attrRef(t, "style"), t.startByte.toLong)
           }
           // other inline tags (b, i, em, span, code, …) are transparent
         }
@@ -404,19 +456,13 @@ object Dom {
             if (tableDepth > 0) tableDepth -= 1
             if (tableDepth == 0) {
               if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-              if (tblRows.nonEmpty) {
-                val rows = tblRows.toVector
-                val text = rows.map(_.mkString(" ")).mkString("\n")
-                val total = text.length
-                out += Block("table", text, rows, tblCls, "", 0, total, boilerDepth > 0,
-                  tblSpanStart, tblSpanEnd, tblElemStart, endByte.toLong)
-              }
-              startBlock(if (stack.nonEmpty) stack.last else "body", "", "", endByte.toLong)
+              if (tblRows.nonEmpty) addTable(tblRows.toVector, endByte.toLong)
+              startBlock(enclosingKind, 0L, 0L, endByte.toLong)
             }
           } else if (tableDepth > 0) {
             name match {
               case "td" | "th" if tableDepth == 1 =>
-                if (inCell) { tblRow += Dom.normalize(tblCell); inCell = false }
+                if (inCell) { tblRow += normalize(tblCell, ks); inCell = false }
               case "tr" if tableDepth == 1 =>
                 if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
               case _ => ()
@@ -426,9 +472,10 @@ object Dom {
           } else if ((fl & FBlock) != 0) {
             flush(endByte.toLong)
             if ((fl & FBoiler) != 0 && boilerDepth > 0) boilerDepth -= 1
-            val idx = stack.lastIndexOf(name)
-            if (idx >= 0) stack.remove(idx, stack.length - idx)
-            startBlock(if (stack.nonEmpty) stack.last else "body", "", "", endByte.toLong)
+            var idx = depth - 1
+            while (idx >= 0 && stack(idx) != name) idx -= 1
+            if (idx >= 0) depth = idx
+            startBlock(enclosingKind, 0L, 0L, endByte.toLong)
           }
         }
     }
@@ -452,13 +499,6 @@ object Dom {
             }
           }
         }
-    }
-
-    def result(): Vector[Block] = resultBuffer().toVector
-
-    private[graft] def resultBuffer(): ArrayBuffer[Block] = {
-      flush(0L)
-      out
     }
   }
 }

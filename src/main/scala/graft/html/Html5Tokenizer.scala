@@ -37,6 +37,92 @@ final class Decoded(val chars: Array[Char], val byteOff: Array[Int], val nChars:
   @inline def off(i: Int): Int = if (identityOffs) i else byteOff(i)
 }
 
+/** The start tag a `TokenSink.tagOpen` call receives: ONE reused view per
+  * thread (`KernelScratch.tagView`), valid only during that call — the
+  * contract the tokenizer's text buffers already have. Attributes sit in
+  * parallel arrays, in source order: interned-or-fresh lowercase names,
+  * and entity-decoded values as ranges of `valueChars`. `attrOrEmpty`
+  * and `toTagOpen` make owned copies. */
+final class TagView {
+  private var name0 = ""
+  private var selfClosing0 = false
+  private var startByte0 = 0
+  private var endByte0 = 0
+  private var nAttrs = 0
+  private var names = new Array[String](8)
+  private var offs = new Array[Int](8)
+  private var lens = new Array[Int](8)
+  private var chars = new Array[Char](256)
+  private var charsLen = 0
+
+  def name: String = name0
+  def selfClosing: Boolean = selfClosing0
+  def startByte: Int = startByte0
+  def endByte: Int = endByte0
+  def valueChars: Array[Char] = chars
+  def valueOff(i: Int): Int = offs(i)
+  def valueLen(i: Int): Int = lens(i)
+
+  /** Index of the first attribute named `k`, or -1. */
+  def attrIndex(k: String): Int = {
+    var i = 0
+    while (i < nAttrs) { if (names(i) == k) return i; i += 1 }
+    -1
+  }
+  private def attrValue(i: Int): String = new String(chars, offs(i), lens(i))
+  def attrOrEmpty(k: String): String = {
+    val i = attrIndex(k)
+    if (i < 0) "" else attrValue(i)
+  }
+
+  /** An owned token with the same name, attributes and span. */
+  def toTagOpen: TagOpen = {
+    var attrs: List[(String, String)] = Nil
+    var i = nAttrs - 1
+    while (i >= 0) { attrs = (names(i) -> attrValue(i)) :: attrs; i -= 1 }
+    TagOpen(name0, attrs, selfClosing0, startByte0, endByte0)
+  }
+
+  private[html] def start(name: String): Unit = {
+    name0 = name; nAttrs = 0; charsLen = 0
+  }
+  private[html] def end(selfClosing: Boolean, startByte: Int, endByte: Int): Unit = {
+    selfClosing0 = selfClosing; startByte0 = startByte; endByte0 = endByte
+  }
+  /** Appends an attribute whose value is `src[from, from + len)`. */
+  private[html] def addAttr(name: String, src: Array[Char], from: Int, len: Int): Unit = {
+    reserve(len)
+    System.arraycopy(src, from, chars, charsLen, len)
+    push(name, len)
+  }
+  private[html] def addAttr(name: String, value: String): Unit = {
+    reserve(value.length)
+    value.getChars(0, value.length, chars, charsLen)
+    push(name, value.length)
+  }
+  private def reserve(len: Int): Unit =
+    if (charsLen + len > chars.length)
+      chars = java.util.Arrays.copyOf(chars, math.max(2 * chars.length, charsLen + len))
+  private def push(name: String, len: Int): Unit = {
+    if (nAttrs == names.length) {
+      names = java.util.Arrays.copyOf(names, 2 * nAttrs)
+      offs = java.util.Arrays.copyOf(offs, 2 * nAttrs)
+      lens = java.util.Arrays.copyOf(lens, 2 * nAttrs)
+    }
+    names(nAttrs) = name; offs(nAttrs) = charsLen; lens(nAttrs) = len
+    charsLen += len
+    nAttrs += 1
+  }
+  /** This view loaded from an owned token (token-list replay). */
+  private[html] def load(t: TagOpen): TagView = {
+    start(t.name)
+    var a = t.attrs
+    while (a.nonEmpty) { addAttr(a.head._1, a.head._2); a = a.tail }
+    end(t.selfClosing, t.startByte, t.endByte)
+    this
+  }
+}
+
 /** From-scratch HTML5-style tokenizer (data / tag / attribute / comment /
   * doctype / RAWTEXT / RCDATA / CDATA states), lenient on hostile bytes:
   * never throws, unterminated constructs are flushed at EOF.
@@ -145,31 +231,22 @@ object Html5Tokenizer {
 
   /** Lenient decode with byte-offset tracking. Invalid UTF-8 sequences
     * become U+FFFD advancing one byte (never throws). */
-  /** Per-thread reusable decode buffers: the decoder's 6-bytes-per-input-
-    * byte transient allocation was the kernel's dominant GC pressure at
-    * high parallelism (allocation-stall measured at local[32]); the
-    * tokenizer consumes the Decoded fully before the next document, so
-    * within `tokenize` the scratch is safe to reuse. */
-  private val scratchChars = new ThreadLocal[Array[Char]] {
-    override def initialValue(): Array[Char] = new Array[Char](64 * 1024)
-  }
-  private val scratchOffs = new ThreadLocal[Array[Int]] {
-    override def initialValue(): Array[Int] = new Array[Int](64 * 1024 + 1)
-  }
-
   def decode(bytes: Array[Byte], charset: String): Decoded =
-    decodeImpl(bytes, charset, reuse = false)
+    decodeImpl(bytes, charset, null)
 
-  private def decodeImpl(bytes: Array[Byte], charset: String, reuse: Boolean): Decoded = {
+  /** With `ks` non-null the result lives in the thread's reusable decode
+    * buffers (`KernelScratch.decChars`/`decOffs`): the tokenizer consumes
+    * the Decoded fully before the next document, so within one kernel
+    * call the scratch is safe to reuse. */
+  private def decodeImpl(bytes: Array[Byte], charset: String, ks: KernelScratch): Decoded = {
     val n = bytes.length
     // worst case one char per byte (+1 offset sentinel); primitive arrays,
     // no boxing — this runs once per document byte
     val chars =
-      if (!reuse) new Array[Char](n)
+      if (ks == null) new Array[Char](n)
       else {
-        var c = scratchChars.get()
-        if (c.length < n) { c = new Array[Char](n + (n >> 1)); scratchChars.set(c) }
-        c
+        if (ks.decChars.length < n) ks.decChars = new Array[Char](n + (n >> 1))
+        ks.decChars
       }
     charset match {
       case "iso-8859-1" | "windows-1252" =>
@@ -190,11 +267,10 @@ object Html5Tokenizer {
     while (asc < n && bytes(asc) >= 0) { chars(asc) = bytes(asc).toChar; asc += 1 }
     if (asc == n) return new Decoded(chars, null, n, identityOffs = true)
     val offs =
-      if (!reuse) new Array[Int](n + 1)
+      if (ks == null) new Array[Int](n + 1)
       else {
-        var o = scratchOffs.get()
-        if (o.length < n + 1) { o = new Array[Int](n + (n >> 1) + 1); scratchOffs.set(o) }
-        o
+        if (ks.decOffs.length < n + 1) ks.decOffs = new Array[Int](n + (n >> 1) + 1)
+        ks.decOffs
       }
     var k = 0
     @inline def put(c: Char, at: Int): Unit = { chars(k) = c; offs(k) = at; k += 1 }
@@ -228,26 +304,24 @@ object Html5Tokenizer {
     new Decoded(chars, offs, k)
   }
 
-  def tokenize(bytes: Array[Byte]): scala.collection.immutable.ArraySeq[HtmlToken] = {
-    val d = decodeImpl(bytes, sniffCharset(bytes), reuse = true)
-    tokenizeDecoded(d)
-  }
+  def tokenize(bytes: Array[Byte]): scala.collection.immutable.ArraySeq[HtmlToken] =
+    tokenizeDecoded(decodeImpl(bytes, sniffCharset(bytes), KernelScratch.get()))
 
   /** Diagnostic hook (DiagPhase): charset-sniff + decode only, no token
     * scan — isolates the decode loop's share of tokenizer cost. */
   private[graft] def decodeOnly(bytes: Array[Byte]): Decoded =
-    decodeImpl(bytes, sniffCharset(bytes), reuse = true)
+    decodeImpl(bytes, sniffCharset(bytes), KernelScratch.get())
 
   /** Streaming consumer of the token scan — the fused path (Dom builds
     * blocks directly from these events with no token materialization;
     * DiagPhase measured the token list + replay at ~2x the event cost).
     *
-    * Contract: `text`'s `buf` is a REUSED buffer, valid only during the
-    * call — copy (append) immediately, never retain. `comment`/`doctype`
-    * pass a raw char range for the same reason. Event order and text-run
-    * batching are IDENTICAL to the token list `tokenize` returns — the
-    * builder adapter below is the proof (it reconstructs exactly the old
-    * output), and the goldens pin both paths byte-for-byte. */
+    * Contract: `text`'s `buf` and `tagOpen`'s view are REUSED, valid
+    * only during the call — copy immediately, never retain.
+    * `comment`/`doctype` pass a raw char range for the same reason.
+    * Event order and text-run batching are IDENTICAL to the token list
+    * `tokenize` returns — that list is this stream with every event
+    * copied (`tokenizeDecoded`), and the goldens pin both paths. */
   trait TokenSink {
     /** Sinks that never read some tags' attributes can return false to
       * skip attr STRING construction for those names (r6b) — the
@@ -256,7 +330,7 @@ object Html5Tokenizer {
       * skips building the name/value strings and the list. Default:
       * parse everything (the token-list path and attr-reading sinks). */
     def wantsAttrs(name: String): Boolean = true
-    def tagOpen(t: TagOpen): Unit
+    def tagOpen(t: TagView): Unit
     def tagClose(name: String, startByte: Int, endByte: Int): Unit
     def text(buf: CharSequence, startByte: Int, endByte: Int): Unit
     def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit
@@ -265,13 +339,18 @@ object Html5Tokenizer {
 
   /** Tokenize straight into a sink — decode + single scan, no token list. */
   def stream(bytes: Array[Byte], sink: TokenSink): Unit =
-    streamDecoded(decodeImpl(bytes, sniffCharset(bytes), reuse = true), sink,
-      KernelScratch.get())
+    stream(bytes, sink, KernelScratch.get())
 
+  /** Same, with the caller's scratch (one ThreadLocal fetch per document). */
+  def stream(bytes: Array[Byte], sink: TokenSink, ks: KernelScratch): Unit =
+    streamDecoded(decodeImpl(bytes, sniffCharset(bytes), ks), sink, ks)
+
+  /** The token list: the event stream with every event copied into an
+    * owned token. */
   def tokenizeDecoded(d: Decoded): scala.collection.immutable.ArraySeq[HtmlToken] = {
     val out = Array.newBuilder[HtmlToken]
     streamDecoded(d, new TokenSink {
-      def tagOpen(t: TagOpen): Unit = out += t
+      def tagOpen(t: TagView): Unit = out += t.toTagOpen
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
         out += TagClose(name, startByte, endByte)
       def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
@@ -348,6 +427,7 @@ object Html5Tokenizer {
     var rawMode: String = null // element name whose raw content we are in
     var rcdataMode = false
     val seq = new ArrayCharSeq(s, n) // shared view for entity decode
+    val tag = ks.tagView
 
     // lit is lowercase ASCII; compare with ASCII case folding only
     @inline def lowerAt(pos: Int, lit: String): Boolean = {
@@ -363,13 +443,13 @@ object Html5Tokenizer {
 
     while (i < n) {
       if (rawMode != null) {
-        // consume until matching </name
-        val closeLit = "</" + rawMode
+        // consume until matching </name (rawMode is a lowercase name)
+        val closeLen = rawMode.length + 2
         var j = i
         var found = -1
         while (found < 0 && j < n) {
-          if (s(j) == '<' && lowerAt(j, closeLit)) {
-            val after = j + closeLit.length
+          if (s(j) == '<' && j + 1 < n && s(j + 1) == '/' && lowerAt(j + 2, rawMode)) {
+            val after = j + closeLen
             if (after >= n || s(after) == '>' || Character.isWhitespace(s(after)) || s(after) == '/') found = j
             else j += 1
           } else j += 1
@@ -396,7 +476,7 @@ object Html5Tokenizer {
         flushText()
         if (found >= 0) {
           // consume the close tag
-          var k = found + closeLit.length
+          var k = found + closeLen
           while (k < n && s(k) != '>') k += 1
           val endByteIdx = if (k < n) k + 1 else n
           sink.tagClose(rawMode, off(found), off(endByteIdx))
@@ -464,13 +544,12 @@ object Html5Tokenizer {
               } else { addText("<", i, i + 1); i += 1 } // "</3" is text
             } else if (Character.isLetter(c1)) {
               flushText()
-              val (tok, next) = parseStartTag(s, d, n, i, sink)
-              sink.tagOpen(tok)
-              i = next
-              if (!tok.selfClosing) {
-                val m = contentMode(tok.name)
-                if ((m & FRawtext) != 0) { rawMode = tok.name; rcdataMode = false }
-                else if ((m & FRcdata) != 0) { rawMode = tok.name; rcdataMode = true }
+              i = parseStartTag(s, d, n, i, sink, tag)
+              sink.tagOpen(tag)
+              if (!tag.selfClosing) {
+                val m = contentMode(tag.name)
+                if ((m & FRawtext) != 0) { rawMode = tag.name; rcdataMode = false }
+                else if ((m & FRcdata) != 0) { rawMode = tag.name; rcdataMode = true }
               }
             } else { addText("<", i, i + 1); i += 1 }
           }
@@ -589,8 +668,6 @@ object Html5Tokenizer {
     -1
   }
 
-  /** Parse `<name attr=... >` starting at `i` (s(i)=='<'). Returns the
-    * token and the char index after '>'. Lenient at EOF. */
   /** ASCII fast paths — exact-equivalent to the Character methods for
     * c < 128 (r6b: the virtual CharacterData dispatch showed in the
     * per-tag scan profile); non-ASCII falls through to the JDK. */
@@ -601,22 +678,20 @@ object Html5Tokenizer {
     if (c < 128) (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
     else Character.isLetterOrDigit(c)
 
+  /** Parse `<name attr=... >` starting at `i0` (s(i0)=='<') into the
+    * view `v`; returns the char index after '>'. Lenient at EOF. */
   private def parseStartTag(s: Array[Char], d: Decoded, n: Int, i0: Int,
-      sink: TokenSink): (TagOpen, Int) = {
-    @inline def off(i: Int): Int = d.off(i)
+      sink: TokenSink, v: TagView): Int = {
     var i = i0 + 1
     val nameStart = i
     while (i < n && (isLetterOrDigitF(s(i)) || s(i) == '-' || s(i) == ':')) i += 1
     val name = lowerString(s, nameStart, i - nameStart)
+    v.start(name)
     // r6b: sinks that never read this tag's attributes (BlockSink on
     // inline tags — a/span/b/img carry the bulk of crawl attrs) skip
-    // the name/value string building and entity decode entirely; the
-    // scan movement below is IDENTICAL either way.
-    val want = sink == null || sink.wantsAttrs(name)
-    // r6: the builder is allocated only when a first attribute appears —
-    // most tags in crawl HTML carry none, and the ListBuffer-per-tag
-    // allocation showed in the kernel profile
-    var attrs: scala.collection.mutable.Builder[(String, String), List[(String, String)]] = null
+    // the name strings and value copies entirely; the scan movement
+    // below is IDENTICAL either way.
+    val want = sink.wantsAttrs(name)
     var selfClosing = false
     var done = false
     while (!done && i < n) {
@@ -630,33 +705,35 @@ object Html5Tokenizer {
         // attribute name
         val as = i
         while (i < n && !isWs(s(i)) && s(i) != '=' && s(i) != '>' && s(i) != '/') i += 1
-        val aname = if (want) lowerString(s, as, i - as) else null
+        val aname = if (want && i > as) lowerString(s, as, i - as) else null
         while (i < n && isWs(s(i))) i += 1
-        var avalue = ""
+        var vs = i // value range [vs, ve): empty unless '=' follows
+        var ve = i
         if (i < n && s(i) == '=') {
           i += 1
           while (i < n && isWs(s(i))) i += 1
           if (i < n && (s(i) == '"' || s(i) == '\'')) {
             val q = s(i); i += 1
-            val vs = i
+            vs = i
             while (i < n && s(i) != q) i += 1
-            if (want) avalue = decodeEntities(new String(s, vs, i - vs))
+            ve = i
             if (i < n) i += 1
           } else {
-            val vs = i
+            vs = i
             while (i < n && !isWs(s(i)) && s(i) != '>') i += 1
-            if (want) avalue = decodeEntities(new String(s, vs, i - vs))
+            ve = i
           }
         }
-        if (want && aname.nonEmpty) {
-          if (attrs == null) attrs = List.newBuilder[(String, String)]
-          attrs += (aname -> avalue)
+        if (aname != null) {
+          var amp = vs
+          while (amp < ve && s(amp) != '&') amp += 1
+          if (amp == ve) v.addAttr(aname, s, vs, ve - vs)
+          else v.addAttr(aname, decodeEntities(new String(s, vs, ve - vs)))
         }
       }
     }
-    val endCharIdx = math.min(i, n)
-    (TagOpen(name, if (attrs == null) Nil else attrs.result(),
-      selfClosing, off(i0), off(endCharIdx)), i)
+    v.end(selfClosing, d.off(i0), d.off(math.min(i, n)))
+    i
   }
 
   def decodeEntities(v: String): String = {

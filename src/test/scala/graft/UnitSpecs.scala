@@ -106,7 +106,7 @@ class ChunkerSpec extends AnyFunSuite {
     (0 until 50).foreach { _ =>
       val blocks = Vector.tabulate(1 + r.nextInt(60)) { i =>
         graft.html.Block("p", "x" * (1 + r.nextInt(800)) + i.toString, Vector.empty,
-          "", "", 0, 10, false, 0, 0, 0, 0)
+          "", "", 0, 10, false, 0, 0, 0, 0, 1)
       }
       val segs = Chunker.segments(blocks)
       assert(segs.length <= Chunker.MaxSegments)
